@@ -672,17 +672,20 @@ def _publish(spark, out, medians):
     # dict beyond the contract keys dropped (metric/value/unit/queries/
     # sf first, then the small scalar flags; measured 1.45 KB at 48
     # rows). The full record still precedes it twice and lives in the
-    # sidecar; `queries` (the published MIN per row) is byte-identical
-    # across all three prints.
-    print(json.dumps(_compact_record(out)), flush=True)
+    # sidecar; `queries` (the published MIN per row) holds the same
+    # values in all three prints.
+    print(_compact_line(out), flush=True)
 
 
 def _compact_record(out: dict) -> dict:
     """The tail-window-safe record: the driver-contract keys first
     (metric/value/unit/queries/sf), then small scalar flags — and NO
-    second per-query dict, so the line stays ~1.65 KB at 48 board rows
-    (vs the 2000-char tail window). ``queries`` is the same object the
-    full line carries — the published MINs, byte-identical."""
+    second per-query dict, so the line stays under the 2000-char tail
+    window at the full board. ``queries`` is the same object the full
+    line carries — the published MINs. ``burst_rows`` is
+    bounded to its first 3 names plus the count ``burst_rows_n`` and
+    ``full_record_error`` to 80 chars; the full values stay in the full
+    line."""
     compact = {
         k: out[k]
         for k in ("metric", "value", "unit", "queries", "sf")
@@ -691,11 +694,23 @@ def _compact_record(out: dict) -> dict:
     for k in (
         "normalization", "value_normalized", "contended",
         "anchors_diverged", "burst_rows", "steal_sec_window",
-        "retry_reason", "complete", "full_record",
+        "retry_reason", "complete", "full_record", "full_record_error",
     ):
         if k in out:
             compact[k] = out[k]
+    if "burst_rows" in out:
+        compact["burst_rows"] = list(out["burst_rows"])[:3]
+        compact["burst_rows_n"] = len(out["burst_rows"])
+    if "full_record_error" in out:
+        compact["full_record_error"] = out["full_record_error"][:80]
     return compact
+
+
+def _compact_line(out: dict) -> str:
+    """:func:`_compact_record` as the printed line, without the spaces
+    after separators: under 1900 chars even with every board row flagged
+    and 7-char values (pinned by ``tests/test_bench_flags.py``)."""
+    return json.dumps(_compact_record(out), separators=(",", ":"))
 
 
 if __name__ == "__main__":

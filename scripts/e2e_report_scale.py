@@ -293,9 +293,6 @@ def main() -> None:
 
     def run_parse() -> float:
         t0 = time.perf_counter()
-        # default two_pass crop: re-extracting frames per pass beats
-        # checkpoint materialize+re-read at this scale (identical
-        # output, verified by order-insensitive whole-table hash)
         write_parquet(
             parse_stage(spark, corpus, catalog),
             sparse_out,

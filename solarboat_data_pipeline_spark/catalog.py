@@ -3,9 +3,10 @@
 The reference decodes CAN payloads with runtime-generated ctypes
 ``LittleEndianStructure`` classes (reference ``lib/canparser_generator.py:29-54``)
 driven by a JSON catalog (loader ``lib/canparser.py:36-50``). Here the same
-catalog is compiled — on the driver, at plan-build time — into native Spark
-``Column`` expressions over the hex payload string, so the whole decode stays
-inside whole-stage codegen (no Python on the data path).
+catalog becomes per-signal layout metadata (byte/bit offset, width, scale)
+that :mod:`.operators.parse` compiles — on the driver, at plan-build time —
+into native Spark expressions, so the whole decode stays inside whole-stage
+codegen (no Python on the data path).
 
 Faithfully reproduced reference quirks (do not "fix"):
 
@@ -32,8 +33,6 @@ import json
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 SEPARATOR = "__"
 
@@ -81,22 +80,6 @@ class CanSignal:
     raw_unit: str  # unit string used for scaling (reference indexing quirk)
     unit: str = ""
     scale: float = 1.0
-
-    def decode(self, payload_hex: Column) -> Column:
-        """Native decode expression over a lowercase hex payload string."""
-        pos = self.byte_offset * 2 + 1  # substring is 1-based
-        lo = F.conv(F.substring(payload_hex, pos, 2), 16, 10).cast("long")
-        if self.bit_width == 16:
-            hi = F.conv(F.substring(payload_hex, pos + 2, 2), 16, 10).cast("long")
-            raw = lo + hi * 256  # little-endian fuse
-        elif self.bit_width == 8:
-            raw = lo
-        else:  # 1-bit bitfield at bit_offset within its byte
-            raw = F.shiftright(lo, self.bit_offset).bitwiseAND(1)
-        out = raw.cast("double")
-        if self.scale != 1.0:
-            out = out * F.lit(self.scale)
-        return out
 
 
 @dataclass(frozen=True)

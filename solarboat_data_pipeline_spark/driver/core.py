@@ -1275,16 +1275,16 @@ def pipeline_can_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-execute their upstream lineage otherwise — the parse ran 4×
     # per call (resample_stage's own docstring: materialize an
     # expensive unmaterialized lineage before the bounds job).
-    # r14 (guide §2.4): the fused parse stats job already measured the
-    # crop bounds — carry them into the resample spine and the asfreq
-    # grid (known_bounds) so neither stage re-aggregates the table.
+    # the parse stats job already measured the crop bounds — carry them
+    # into the resample spine and the asfreq grid (known_bounds) so
+    # neither stage re-aggregates the table.
     from solarboat_data_pipeline_spark.pipeline import grid_bounds
 
     stats: dict = {}
     wide = parse_stage(
         spark, stage, catalog, stats_out=stats
     ).localCheckpoint(eager=False)
-    kb = (stats["first_ts"], stats["last_ts"]) if "first_ts" in stats else None
+    kb = (stats["first_ts"], stats["last_ts"])
     res = resample_stage(wide, 1.0, known_bounds=kb).localCheckpoint(
         eager=False
     )
@@ -1306,7 +1306,7 @@ def pipeline_can_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = unify_forecast_stage(
         res, fc, 1.0,
-        known_bounds=grid_bounds(kb, 1.0) if kb is not None else None,
+        known_bounds=grid_bounds(kb, 1.0),
     )
 
     gps = spark.range(0, 260).select(

@@ -9,13 +9,14 @@ Python on the data path.
 Two output shapes:
 
 * :func:`decode_long` — one row per decoded signal (the reference's
-  intermediate "tall" table built at ``lib/canparser.py:106-111,159-169``),
-  via a single generated CASE producing ``array<struct>`` + ``explode``.
-* :func:`decode_wide` — the pivoted wide table (``lib/canparser.py:222-239``)
-  computed **directly** as one hash aggregate of conditional ``avg`` s per
-  wide column. This replaces the reference's groupby-mean + unstack (A1+A2)
-  with a single shuffle and map-side partial aggregation — the plan you want
-  at 100 TB (no explode blow-up, no second pivot pass).
+  intermediate "tall" table built at ``lib/canparser.py:106-111,159-169``).
+* :func:`decode_wide` — the wide table of ``lib/canparser.py:222-239``
+  (groupby-mean + unstack: one row per matched timestamp, same-µs
+  duplicate frames averaged per signal). It has two forms: the per-frame
+  projection :func:`decode_wide_project` for batch frames, and the
+  shuffle form :func:`_decode_wide_shuffle` (one ``groupBy(timestamp)``
+  of per-frame entry lists) for streams and for batch corpora with more
+  than ``_PROJECT_DUP_MAX`` duplicate timestamps.
 """
 
 from __future__ import annotations
@@ -94,14 +95,6 @@ def with_frame_meta(frames: DataFrame, mab20_workaround: bool = False) -> DataFr
     return df.withColumn("payload_len", (F.length("payload_hex") / 2).cast("int"))
 
 
-def _topic_condition(module_sig: int, topic_id: int, size: int) -> Column:
-    return (
-        (F.col("signature") == module_sig)
-        & (F.col("topic_id") == topic_id)
-        & (F.col("payload_len") == size)
-    )
-
-
 def decode_long(frames: DataFrame, catalog: CanCatalog) -> DataFrame:
     """P8+P10-P12: schema lookup + binary decode + 1→N explode.
 
@@ -135,31 +128,25 @@ def decode_long(frames: DataFrame, catalog: CanCatalog) -> DataFrame:
     )
 
 
-# above this many wide columns, the pivot runs as ONE collect_list-to-map
-# aggregate + per-column map extraction instead of n_cols aggregate
-# functions: measured on 2M lines × 280 columns, agg-pivot 53k lines/s vs
-# map-pivot 90k (the fused decode_wide drops to 43k at that width — its
-# n_cols conditional aggregates are evaluated for every input row)
+# above this many wide columns, pivot_wide(strategy="auto") runs as ONE
+# collect_list-to-map aggregate + per-column map extraction instead of
+# n_cols aggregate functions: measured on 2M lines × 280 columns,
+# agg-pivot 53k lines/s vs map-pivot 90k
 WIDE_PIVOT_MAX_AGG_COLS = 32
 
 
 def decode_indexed(frames: DataFrame, catalog: CanCatalog) -> DataFrame:
     """P8+P10-P12, index-keyed and catalog-size-independent: each signal
     row is ``(timestamp, idx, value)`` where ``idx`` is the signal's
-    position in ``catalog.wide_columns()`` order — the internal shape for
-    the wide pivot at scale.
+    position in ``catalog.wide_columns()`` order — the internal shape
+    behind :func:`decode_long`.
 
-    Unlike the per-topic generated CASE of :func:`decode_long` — whose
-    single CaseWhen expression overflows Janino's 64 KB method limit on
-    wide catalogs (50+ topics) and knocks the whole stage out of
-    whole-stage codegen into interpreted eval — the catalog here is a
-    CONSTANT-FOLDED literal ``map<key, struct<size, fields>>`` looked up
-    per frame, and the field decode is one small GENERIC expression over
-    ``(byte_offset, bit_offset, width, scale)`` applied after the explode.
-    Codegen size is O(1) in catalog width, so the decode stays compiled
-    for the reference's 233-signal schema and beyond. Dropping the three
-    name strings + unit per signal row (≈40 bytes → 12) also shrinks both
-    pivot shuffles ~3×."""
+    The catalog is a CONSTANT-FOLDED literal ``map<key, struct<size,
+    fields>>`` looked up per frame, and the field decode is one small
+    GENERIC expression over ``(byte_offset, bit_offset, width, scale)``
+    applied after the explode. Codegen size is O(1) in catalog width, so
+    the decode stays inside whole-stage codegen (under Janino's 64 KB
+    method limit) for the reference's 233-signal schema and beyond."""
     matched = _matched_frames(frames, catalog)
     s = matched.select(
         "timestamp",
@@ -277,17 +264,11 @@ def _decode_field(words: Column, f: Column) -> Column:
     return raw.cast("double") * f["scale"]
 
 
-def _byte_at_static(words: Column, off: int) -> Column:
-    """:func:`_byte_at` with a LITERAL offset — the word index and
-    within-word shift resolve at plan time, so the byte read is one
-    ``element_at`` + literal shift + mask instead of a 4-arm CASE."""
-    w = F.element_at(words, off // 4 + 1)
-    shift = (3 - off % 4) * 8
-    return (F.shiftright(w, shift) if shift else w).bitwiseAND(255)
-
-
 def _byte_at_static_sql(words_col: str, off: int) -> str:
-    """:func:`_byte_at_static` as SQL text (same AST after parsing)."""
+    """Payload byte ``off`` (a LITERAL offset) as SQL text: the word
+    index and within-word shift resolve at plan time, so the byte read is
+    one ``element_at`` + literal shift + mask instead of the 4-arm CASE
+    of :func:`_byte_at`."""
     w = f"element_at({words_col}, {off // 4 + 1})"
     shift = (3 - off % 4) * 8
     inner = f"shiftright({w}, {shift})" if shift else w
@@ -297,7 +278,9 @@ def _byte_at_static_sql(words_col: str, off: int) -> str:
 def _decode_field_static_sql(
     words_col: str, off: int, bit: int, width: int, scale: float
 ) -> str:
-    """:func:`_decode_field_static` as SQL text. Why text: a 187-column
+    """:func:`_decode_field` with LITERAL field geometry, as SQL text:
+    the width/offset dispatch happens in Python at plan time, emitting
+    just the 2-3 arithmetic ops the field needs. Why text: a 187-column
     catalog's projection built through the Column API costs ~2,000 py4j
     round trips ≈ 8-10 s of driver time PER plan build (measured on the
     6 M-line bench row — more than the executed scan itself); the same
@@ -316,39 +299,19 @@ def _decode_field_static_sql(
     return f"CAST({raw} AS DOUBLE) * {scale!r}D"
 
 
-def _decode_field_static(
-    words: Column, off: int, bit: int, width: int, scale: float
-) -> Column:
-    """:func:`_decode_field` with LITERAL field geometry: the
-    width/offset dispatch happens in Python at plan time, emitting just
-    the 2-3 arithmetic ops the field actually needs (same semantics —
-    ctypes ``LittleEndianStructure`` access, LE u16 fuse, LSB-run
-    bitfields, scale folded in)."""
-    lo = _byte_at_static(words, off)
-    if width == 16:
-        raw = lo + _byte_at_static(words, off + 1) * 256
-    elif width == 8:
-        raw = lo
-    else:  # LSB-run bitfield: lo >= 0, so shiftright == floor-div by 2^bit
-        raw = F.shiftright(lo, bit).bitwiseAND(1)
-    return raw.cast("double") * F.lit(scale)
-
-
-# driver-side cap on duplicate timestamps the projection strategy folds
-# into scan-filter literals (same plan-cost ceiling rationale as
+# driver-side cap on duplicate timestamps the projection form folds into
+# scan-filter literals (same plan-cost ceiling rationale as
 # similarity._ISIN_PUSHDOWN_MAX - a Catalyst literal list past ~10k
 # nodes costs more than it saves); a corpus denser in same-us
-# collisions than this falls back to the shuffle-based long strategy
+# collisions than this takes the shuffle form
 _PROJECT_DUP_MAX = 10_000
 
 
 class ProjectDuplicateOverflow(ValueError):
-    """A same-µs-heavy corpus exceeded ``_PROJECT_DUP_MAX`` duplicate
-    timestamps — the projection strategy cannot fold the duplicate set
-    into scan-filter literals. ``decode_wide(strategy="auto")`` catches
-    this and degrades to the shuffle-based long path (an unattended batch
-    job must not die hours in on a data-shape property, VERDICT r9 #2);
-    an EXPLICIT ``strategy="project"`` still surfaces it."""
+    """A corpus has more than ``_PROJECT_DUP_MAX`` duplicate timestamps,
+    so :func:`decode_wide_project` cannot fold the duplicate set into
+    scan-filter literals. :func:`decode_wide` catches it and takes the
+    shuffle form; a direct ``decode_wide_project`` call raises it."""
 
 
 def decode_wide_project(
@@ -357,32 +320,25 @@ def decode_wide_project(
     downcast: bool = True,
     dup_ts: list | None = None,
 ) -> DataFrame:
-    """A2 wide decode as a PURE PER-FRAME PROJECTION — the scale path for
-    corpora where same-µs duplicate frames are rare or absent (measured
-    ZERO in the reference-shaped 6M/78M-line replays; the reference's own
-    groupby-mean meets duplicates only on pathological logs).
+    """A2 wide decode of BATCH frames as a per-frame projection.
 
-    Every other strategy pays for A1 same-µs merging on every row: the
-    ``long`` path shuffles ~3 signal rows per frame into a per-timestamp
-    ``collect_list``, ``fused`` ships 187 partial-avg buffers per group
-    through the exchange. Here each matched frame decodes DIRECTLY to its
-    wide row — 187 statically-specialized guarded expressions
-    (:func:`_decode_field_static`; no spec-struct materialization, no
-    explode, no wide shuffle) — and A1 only runs where it is needed: one
-    THIN pass counts duplicate timestamps (column-pruned to the ts field,
-    shuffling 8-byte rows), the usually-empty duplicate set folds into
-    scan-filter literals, and only those rows take an avg detour. The dup
-    check makes construction EAGER (two jobs at plan time), and the
-    duplicate list is capped at ``_PROJECT_DUP_MAX`` — beyond it (or on
-    any same-µs-heavy corpus) use ``strategy="long"``. A caller that
-    already knows the duplicate timestamps (``pipeline.parse_stage``
-    derives them inside its crop-bounds pass for free) passes them as
-    ``dup_ts`` and no extra pass runs.
+    Each matched frame decodes directly to its wide row: one statically
+    specialized expression per wide column (:func:`_decode_field_static_sql`),
+    no explode and no wide shuffle. A1 same-µs merging runs only on the
+    duplicate timestamps: their rows are averaged per column by a small
+    aggregate and unioned with the projected unique-timestamp rows.
+
+    Eager jobs: with ``dup_ts=None`` construction runs one thin
+    ``groupBy(timestamp)`` count (column-pruned to the timestamp) and
+    collects at most ``_PROJECT_DUP_MAX + 1`` duplicate timestamps;
+    more than ``_PROJECT_DUP_MAX`` raises :class:`ProjectDuplicateOverflow`.
+    A caller that already knows the duplicate timestamps passes them as
+    ``dup_ts`` (``[]`` for none) and construction runs no job.
 
     Reference parity: ``lib/canparser.py:222-239`` (groupby-mean +
-    unstack, here split into identity for unique ts + mean for dups) with
-    the same unknown-frame / wrong-length drops (:func:`_matched_frames`
-    semantics, re-expressed as an In + size-map filter)."""
+    unstack) with the same unknown-frame / wrong-length drops
+    (:func:`_matched_frames` semantics, re-expressed as an In + size-map
+    filter)."""
     cols = catalog.wide_columns()
     topics = list(catalog.iter_topics())
     if not topics:
@@ -440,8 +396,7 @@ def decode_wide_project(
         if len(dup_rows) > _PROJECT_DUP_MAX:
             raise ProjectDuplicateOverflow(
                 f"decode_wide_project: more than {_PROJECT_DUP_MAX}"
-                " duplicate timestamps — this corpus is same-us-heavy;"
-                " use strategy='long'"
+                " duplicate timestamps — this corpus is same-us-heavy"
             )
         dup_ts = [r["timestamp"] for r in dup_rows]
     def out_col(e: str, c: str):
@@ -477,18 +432,16 @@ def decode_wide_project(
 
 
 # a CAN payload is at most 8 bytes, so a topic decodes to at most 8 fused
-# fields — the frame_map strategy decodes all slots with fixed expressions
+# fields — the shuffle form decodes all slots with fixed expressions
 MAX_TOPIC_FIELDS = 8
 
 
 def _decode_frame_entries(frames: DataFrame, catalog: CanCatalog) -> DataFrame:
-    """One row PER FRAME with its decoded ``(idx, value)`` entry array —
-    no explode, no shuffle: each possible field slot is decoded by a
-    fixed generic expression (null-idx slots filtered out). The slot
-    count is the CATALOG's widest topic (≥ the classic-CAN 8 so existing
-    plans are unchanged) — pinned at 8, a >8-byte CAN FD topic's tail
-    fields would silently null on this strategy while fused/long decode
-    them (the strategies must stay cell-for-cell equivalent)."""
+    """One row PER MATCHED FRAME with its decoded ``(idx, value)`` entry
+    array ``_sv`` — no explode, no shuffle: each possible field slot is
+    decoded by a fixed generic expression (null-idx slots filtered out).
+    The slot count is the catalog's widest topic (at least 8), so every
+    field a topic declares is decoded, CAN FD tails included."""
     matched = _matched_frames(frames, catalog)
     n_slots = max(
         MAX_TOPIC_FIELDS,
@@ -584,131 +537,47 @@ def pivot_wide(
     )
 
 
+def _decode_wide_shuffle(
+    entries: DataFrame, catalog: CanCatalog, downcast: bool = True
+) -> DataFrame:
+    """The shuffle form of the wide decode, over the per-frame entry rows
+    of :func:`_decode_frame_entries`: ONE ``groupBy(timestamp)`` whose
+    shuffle carries thin ``(timestamp, entries)`` rows, then the A1
+    per-signal mean (:func:`_merge_entries_mean`) and the static wide
+    schema. No eager job, so it is stream-safe; a watermark set on
+    ``entries`` bounds its state (:func:`streaming.stream_decode_wide`)."""
+    merged = (
+        entries.groupBy("timestamp")
+        .agg(F.flatten(F.collect_list("_sv")).alias("_sv"))
+        .select("timestamp", _merge_entries_mean(F.col("_sv")).alias("_m"))
+    )
+    return _extract_wide_cols(merged, catalog.wide_columns(), downcast)
+
+
 def decode_wide(
     frames: DataFrame,
     catalog: CanCatalog,
     downcast: bool = True,
-    strategy: str = "auto",
 ) -> DataFrame:
-    """Decode + pivot to the wide table.
+    """Decode + pivot to the wide table: one row per timestamp holding at
+    least one matched frame, same-µs duplicate frames averaged per signal
+    (A1), unknown and wrong-length frames dropped. ``downcast=True`` casts
+    value columns to float, the faithful superset of the reference's
+    float16 (``lib/canparser.py:234``, P17).
 
-    ``strategy="fused"``: one hash aggregate of conditional means — a
-    single shuffle, no row explosion; fastest for narrow catalogs but its
-    n_cols aggregates are evaluated for EVERY input row, so it degrades as
-    the catalog widens (43k lines/s at 280 columns vs 90k for the long
-    path on the 2M-line bench). ``"long"``: ``decode_long`` →
-    map-strategy ``pivot_wide``. ``"auto"`` picks by catalog width.
-
-    All strategies are equivalent (same-µs duplicate frames average per
-    signal, A1). ``"frame_map"`` is the zero-shuffle wide path: each frame
-    decodes to its entry map in place (≤8 fixed codegen expressions, no
-    explode), and only timestamps that actually hold MULTIPLE frames —
-    found by one thin count pass, typically a broadcast-empty set — take
-    a merge detour; everything else never shuffles. It reads the frames
-    twice, so pair it with ``parse_stage(crop_strategy="cached")`` (or any
-    materialized frame source). ``downcast=True`` casts value columns to
-    float, the faithful superset of the reference's float16
-    (``lib/canparser.py:234``, P17)."""
-    if strategy not in ("auto", "fused", "long", "frame_map", "project"):
-        raise ValueError("strategy must be auto|fused|long|frame_map|project")
-    cols = catalog.wide_columns()
-    if strategy == "project" and frames.isStreaming:
-        raise ValueError(
-            "strategy='project' is batch-only: its duplicate-timestamp"
-            " check collects eagerly, which a streaming source cannot do"
-            " — use the streaming decode paths (decode_long) or 'fused'"
-        )
-    if strategy == "auto" and not frames.isStreaming and (
-        len(cols) > WIDE_PIVOT_MAX_AGG_COLS
-    ):
-        # round 9: wide batch catalogs decode as per-frame projections —
-        # zero wide shuffle, A1 merging only where duplicate timestamps
-        # exist (measured 9.3 s vs long's 11.7 s on the 6M/187-column
-        # fixture; parse_stage's fused bounds+dup pass is faster still).
-        # Streaming frames keep the shuffle-based paths (the dup check
-        # cannot run eagerly on an unbounded source). A same-µs-heavy
-        # corpus (> _PROJECT_DUP_MAX duplicate timestamps) DEGRADES to
-        # the long path instead of raising — auto picked project, so
-        # auto owns the fallback (VERDICT r9 #2); explicit
-        # strategy="project" below still raises.
+    Batch frames take :func:`decode_wide_project`, whose construction runs
+    its eager duplicate-timestamp job; past ``_PROJECT_DUP_MAX``
+    duplicate timestamps it warns and takes the shuffle form instead.
+    Streaming frames take the shuffle form (:func:`_decode_wide_shuffle`)
+    and run no eager job."""
+    if not frames.isStreaming:
         try:
             return decode_wide_project(frames, catalog, downcast=downcast)
         except ProjectDuplicateOverflow as exc:
             warnings.warn(
-                f"decode_wide(auto): {exc}; falling back to the"
-                " shuffle-based long strategy",
+                f"decode_wide: {exc}; falling back to the shuffle form",
                 stacklevel=2,
             )
-            strategy = "long"
-    if strategy == "project":
-        return decode_wide_project(frames, catalog, downcast=downcast)
-    if strategy == "frame_map":
-        per_frame = _decode_frame_entries(frames, catalog)
-        # thin pass: only (timestamp) is read — Catalyst prunes the decode
-        dups = (
-            per_frame.groupBy("timestamp")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .where(F.col("__n") > 1)
-            .select("timestamp")
-        )
-        uniq = per_frame.join(F.broadcast(dups), "timestamp", "anti").select(
-            "timestamp", F.map_from_entries("_sv").alias("_m")
-        )
-        dup_g = (
-            per_frame.join(F.broadcast(dups), "timestamp", "semi")
-            .select("timestamp", F.explode("_sv").alias("e"))
-            .groupBy("timestamp")
-            .agg(
-                F.collect_list(
-                    F.struct(
-                        F.col("e.idx").alias("idx"),
-                        F.col("e.value").alias("value"),
-                    )
-                ).alias("_sv")
-            )
-        )
-        m = uniq.unionByName(
-            dup_g.select("timestamp", _merge_entries_mean(F.col("_sv")).alias("_m"))
-        )
-        return _extract_wide_cols(m, cols, downcast)
-    if strategy == "long" or (
-        strategy == "auto" and len(cols) > WIDE_PIVOT_MAX_AGG_COLS
-    ):
-        # index-keyed long path, ONE shuffle: the codegen'd explode decode
-        # emits thin (ts, idx, value) rows; a single collect_list groups a
-        # timestamp's few signals, and the A1 mean over the rare same-µs
-        # same-signal duplicates is computed in the projection with
-        # higher-order functions over the tiny per-row array (≈ signals
-        # per frame elements) — no second 47M-row shuffle, no n_cols
-        # aggregate fan-out
-        g = (
-            decode_indexed(frames, catalog)
-            .groupBy("timestamp")
-            .agg(F.collect_list(F.struct("idx", "value")).alias("_sv"))
-        )
-        m = g.select(
-            "timestamp", _merge_entries_mean(F.col("_sv")).alias("_m")
-        )
-        return _extract_wide_cols(m, cols, downcast)
-    aggs = []
-    for mod, top in catalog.iter_topics():
-        cond = _topic_condition(mod.signature, top.topic_id, top.size)
-        for s in top.signals:
-            colname = SEPARATOR.join([mod.name, top.name, s.name])
-            expr = F.avg(F.when(cond, s.decode(F.col("payload_hex"))))
-            if downcast:
-                expr = expr.cast("float")
-            aggs.append(expr.alias(colname))
-    # frames that match no topic contribute only null aggregates; the
-    # reference drops them entirely, so keep only timestamps with ≥1 match
-    match_any = F.max(
-        F.coalesce(
-            *[
-                F.when(_topic_condition(m.signature, t.topic_id, t.size), F.lit(1))
-                for m, t in catalog.iter_topics()
-            ],
-            F.lit(0),
-        )
-    ).alias("_matched")
-    out = frames.groupBy("timestamp").agg(*aggs, match_any)
-    return out.where(F.col("_matched") == 1).drop("_matched")
+    return _decode_wide_shuffle(
+        _decode_frame_entries(frames, catalog), catalog, downcast
+    )

@@ -71,50 +71,31 @@ def stream_decode_wide(
     watermark: str = "10 seconds",
     downcast: bool = True,
 ) -> DataFrame:
-    """A2 wide decode on a STREAM — the projection-shaped plan the batch
-    path gets from ``decode_wide_project``, made stream-safe
-    (VERDICT r9 #5; closes the round-9 envelope note "streaming wide
-    decode is shuffle-based").
+    """A2 wide decode on a STREAM: the shuffle form of
+    :func:`operators.parse.decode_wide` with the A1 same-µs merge run as
+    a WATERMARK-BOUNDED streaming aggregate keyed by timestamp.
 
-    Batch ``decode_wide_project`` folds the duplicate-timestamp set into
-    scan-filter literals via an EAGER pass — impossible on an unbounded
-    source. Here the per-frame decode stays a pure projection (the same
-    fixed-expression slot decode as the batch ``frame_map`` strategy:
-    no explode, no spec-struct materialization, no per-row Python) and
-    the A1 same-µs duplicate merge runs as a WATERMARK-BOUNDED streaming
-    aggregate keyed by timestamp:
-
-    * per-key state is the frame's decoded ``(idx, value)`` entry list —
-      ~tens of bytes per unique timestamp in the watermark span, NOT a
-      187-column aggregation buffer (the wide-agg form would hold ~3 KB
-      per key and evaluate 187 avg updates per input row);
-    * duplicates merge through :func:`_merge_entries_mean`, whose
-      no-duplicate fast path is the map identity — bit-exact parity with
-      the batch strategies (cell-for-cell, locked by
-      ``tests/test_streaming.py``);
+    * per-key state is the decoded ``(idx, value)`` entry list of the
+      timestamp's matched frames — tens of bytes per unique timestamp in
+      the watermark span;
+    * the watermark is set on the matched frames, so unknown and
+      wrong-length frames do not advance it;
     * state retires as the watermark passes each timestamp (append
-      mode), so memory is rate × span, independent of stream length.
+      mode), so memory is rate × span, independent of stream length;
+    * cells equal the batch decode's (locked by ``tests/test_streaming.py``).
 
-    The one shuffle per micro-batch carries thin ``(timestamp, entries)``
-    rows — the wide row materializes only AFTER the merge, once per
-    unique timestamp. Reference parity: ``lib/canparser.py:222-239``
+    No eager job runs. Reference parity: ``lib/canparser.py:222-239``
     (groupby-mean + unstack), chunked analogue ``lib/canparser.py:306``.
     """
     from solarboat_data_pipeline_spark.operators.parse import (
         _decode_frame_entries,
-        _extract_wide_cols,
-        _merge_entries_mean,
+        _decode_wide_shuffle,
     )
 
-    cols = catalog.wide_columns()
-    per_frame = _decode_frame_entries(frames, catalog)
-    merged = (
-        per_frame.withWatermark("timestamp", watermark)
-        .groupBy("timestamp")
-        .agg(F.flatten(F.collect_list("_sv")).alias("_sv"))
-        .select("timestamp", _merge_entries_mean(F.col("_sv")).alias("_m"))
+    entries = _decode_frame_entries(frames, catalog).withWatermark(
+        "timestamp", watermark
     )
-    return _extract_wide_cols(merged, cols, downcast)
+    return _decode_wide_shuffle(entries, catalog, downcast)
 
 
 def stream_resample_mean(

@@ -18,13 +18,18 @@ _BENCH = os.path.join(os.path.dirname(__file__), os.pardir, "bench.py")
 
 
 @pytest.fixture(scope="module")
-def burst_rows():
+def bench_module():
     # bench.py is a script, not a package module; load it directly but
-    # only for the pure helper (no SparkSession is created at import).
+    # only for the pure helpers (no SparkSession is created at import).
     spec = importlib.util.spec_from_file_location("bench_module", _BENCH)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-    return mod._burst_rows
+    return mod
+
+
+@pytest.fixture(scope="module")
+def burst_rows(bench_module):
+    return bench_module._burst_rows
 
 
 def test_quiet_board_flags_nothing(burst_rows):
@@ -52,14 +57,6 @@ def test_none_and_missing_medians_safe(burst_rows):
     timings = {"a": 1.0, "b": None, "c": 0.9}
     medians = {"a": None, "c": 0.95}
     assert burst_rows(timings, medians) == []
-
-
-@pytest.fixture(scope="module")
-def bench_module():
-    spec = importlib.util.spec_from_file_location("bench_module", _BENCH)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
 
 
 def test_compact_record_fits_tail_window(bench_module):
@@ -102,3 +99,42 @@ def test_compact_record_fits_tail_window(bench_module):
     assert "queries_median" not in compact
     # first key on the line is the contract anchor
     assert line.startswith('{"metric"')
+
+
+def test_compact_record_worst_case_fits_tail_window(bench_module):
+    """Every HEADLINE row flagged as a burst row, 7-char values and a
+    sidecar write error: the printed compact line still fits the tail
+    window. ``burst_rows`` is bounded to a count plus at most 3 names,
+    and ``full_record_error`` tells a tail-only reader the sidecar is
+    missing."""
+    import json
+
+    names = list(bench_module.HEADLINE) + [
+        "parse_candump_2m_lines", "parse_real_catalog_6m_lines",
+    ]
+    queries = {n: round(100.123 + i, 3) for i, n in enumerate(names)}
+    out = {
+        "metric": "headline_queries_total_time",
+        "value": 1234.567,
+        "unit": "sec",
+        "queries": queries,
+        "sf": 0.1,
+        "queries_median": dict(queries),
+        "normalization": 1.234567,
+        "value_normalized": 1523.456,
+        "contended": True,
+        "anchors_diverged": True,
+        "burst_rows": list(bench_module.HEADLINE),
+        "steal_sec_window": 1234.567,
+        "retry_reason": "anchors_diverged",
+        "complete": False,
+        "full_record_error": "x" * 200,
+    }
+    line = bench_module._compact_line(out)
+    assert len(line) < 1900, len(line)
+    compact = json.loads(line)
+    assert line.startswith('{"metric"')
+    assert compact["burst_rows"] == list(bench_module.HEADLINE)[:3]
+    assert compact["burst_rows_n"] == len(bench_module.HEADLINE)
+    assert out["full_record_error"].startswith(compact["full_record_error"])
+    assert compact["queries"] == out["queries"]

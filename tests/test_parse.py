@@ -15,9 +15,12 @@ from pyspark.sql import functions as F
 
 from solarboat_data_pipeline_spark.catalog import CanCatalog
 from solarboat_data_pipeline_spark.operators.parse import (
+    _decode_frame_entries,
+    _decode_wide_shuffle,
     crop_to_bounds,
     decode_long,
     decode_wide,
+    decode_wide_project,
     pivot_wide,
     with_frame_meta,
     with_timestamp,
@@ -28,6 +31,14 @@ from tests.conftest import DATA_DIR
 
 CORPUS = os.path.join(DATA_DIR, "sample.candump")
 MINI = os.path.join(DATA_DIR, "mini_can_ids.json")
+
+
+def _shuffle(frames, catalog, downcast=False):
+    """The shuffle wide-decode form, which decode_wide takes for streams
+    and past the duplicate cap."""
+    return _decode_wide_shuffle(
+        _decode_frame_entries(frames, catalog), catalog, downcast
+    )
 
 
 @pytest.fixture(scope="module")
@@ -88,19 +99,18 @@ def test_decode_long(frames, catalog):
 
 
 def test_decode_wide_matches_pivot(frames, catalog):
-    wide = decode_wide(frames, catalog, downcast=False, strategy="fused")
+    # the fixture has same-µs duplicates, so this also exercises the
+    # projection form's avg detour
+    wide = decode_wide(frames, catalog, downcast=False)
     assert wide.count() == 7  # distinct matched timestamps
     a = {r["timestamp"]: r for r in wide.collect()}
 
-    # every pivot strategy must agree cell-for-cell with the fused decode
+    # both pivot strategies over the long decode and the shuffle form
+    # must agree cell-for-cell with the projection
     for alt in (
         pivot_wide(decode_long(frames, catalog), catalog, strategy="agg"),
         pivot_wide(decode_long(frames, catalog), catalog, strategy="map"),
-        decode_wide(frames, catalog, downcast=False, strategy="long"),
-        decode_wide(frames, catalog, downcast=False, strategy="frame_map"),
-        # the fixture has same-µs duplicates, so this also exercises the
-        # projection strategy's avg detour
-        decode_wide(frames, catalog, downcast=False, strategy="project"),
+        _shuffle(frames, catalog),
     ):
         assert set(wide.columns) == set(alt.columns)
         b = {r["timestamp"]: r for r in alt.collect()}
@@ -183,13 +193,12 @@ def test_crop_bounds_multi_file_order(spark, tmp_path):
 
 
 def test_randomized_decode_parity_vs_python_reference(spark, tmp_path):
-    """Seeded-random catalogs + payloads, decoded cell-for-cell three
-    ways: the index-keyed long path (word-arithmetic `_decode_field`),
-    the fused conditional-aggregate path (`CanSignal.decode` over the
-    hex string — an independent Spark expression), and a pure-Python
-    byte decoder implementing the ctypes LittleEndianStructure
-    semantics directly. Duplicate-timestamp frames exercise the A1
-    mean; wrong-length payloads and unknown signatures must drop."""
+    """Seeded-random catalogs + payloads, decoded cell-for-cell by both
+    wide forms (the projection and the shuffle form) and by the long
+    decode pivoted with conditional avgs, against a pure-Python byte
+    decoder implementing the ctypes LittleEndianStructure semantics
+    directly. Duplicate-timestamp frames exercise the A1 mean;
+    wrong-length payloads and unknown signatures must drop."""
     import random
 
     rng = random.Random(0xC0FFEE)
@@ -258,21 +267,27 @@ def test_randomized_decode_parity_vs_python_reference(spark, tmp_path):
         want[(ts_us, col)] = sum(vals) / len(vals)
     want_ts = {ts for ts, _ in want}
 
-    for strategy in ("long", "fused", "project"):
-        wide = decode_wide(frames, catalog, downcast=False, strategy=strategy)
+    forms = {
+        "project": decode_wide(frames, catalog, downcast=False),
+        "shuffle": _shuffle(frames, catalog),
+        "long+agg": pivot_wide(
+            decode_long(frames, catalog), catalog, strategy="agg"
+        ),
+    }
+    for form, wide in forms.items():
         got = {}
         for r in wide.collect():
             ts_us = int(r["timestamp"].timestamp() * 1_000_000)
             for c in cols:
                 if r[c] is not None:
                     got[(ts_us, c)] = r[c]
-        assert set(got) == set(want), strategy
+        assert set(got) == set(want), form
         for k, v in want.items():
-            assert got[k] == pytest.approx(v, abs=1e-9), (strategy, k)
+            assert got[k] == pytest.approx(v, abs=1e-9), (form, k)
         # every rejected line produced no row at all
         got_ts = {int(r["timestamp"].timestamp() * 1_000_000)
                   for r in wide.collect()}
-        assert got_ts == want_ts, strategy
+        assert got_ts == want_ts, form
 
 
 def test_decode_handles_payloads_beyond_8_bytes(spark):
@@ -298,22 +313,26 @@ def test_decode_handles_payloads_beyond_8_bytes(spark):
         "timestamp timestamp, payload_hex string, signature int, "
         "topic_id int, payload_len int",
     )
-    # every strategy must decode the >8-byte tail identically (frame_map
-    # previously capped at 8 slots and silently nulled tail fields)
-    for strategy in ("fused", "long", "frame_map", "project"):
-        r = decode_wide(frames, cat, downcast=False, strategy=strategy).first()
+    # every form must decode the >8-byte tail identically (the shuffle
+    # form's slot decode must not cap at classic CAN's 8 fields)
+    forms = {
+        "project": decode_wide(frames, cat, downcast=False),
+        "shuffle": _shuffle(frames, cat),
+        "long+agg": pivot_wide(decode_long(frames, cat), cat, strategy="agg"),
+    }
+    for form, wide in forms.items():
+        r = wide.first()
         # tail16 at bytes 8-9 little-endian = 0x34 + 0x12*256
-        assert r["FD__W__tail16"] == float(0x34 + 0x12 * 256), strategy
+        assert r["FD__W__tail16"] == float(0x34 + 0x12 * 256), form
         # b8: bit 0 of byte 10 (0x05) = 1 ; last: byte 11 = 0xFE
-        assert r["FD__W__b8"] == 1.0, strategy
-        assert r["FD__W__last"] == 254.0, strategy
-        assert r["FD__W__p6"] == 7.0, strategy  # below the old boundary too
+        assert r["FD__W__b8"] == 1.0, form
+        assert r["FD__W__last"] == 254.0, form
+        assert r["FD__W__p6"] == 7.0, form  # inside classic CAN's 8 bytes too
 
 
 def _widened(catalog_path):
-    """The mini catalog widened past WIDE_PIVOT_MAX_AGG_COLS with
-    never-matching topics, so wide-catalog strategy selection triggers
-    on the small fixture."""
+    """The mini catalog widened with 20 never-matching topics, so every
+    form must emit all-null columns for topics absent from the corpus."""
     import json
 
     with open(catalog_path) as f:
@@ -330,15 +349,13 @@ def _widened(catalog_path):
 
 
 def test_auto_picks_project_for_wide_batch(frames, catalog):
-    """Wide batch catalogs decode via the per-frame projection (zero
-    wide shuffle) and agree cell-for-cell with the long strategy —
-    including the fixture's same-µs duplicate pair; streaming frames
-    must never take the eager projection path."""
+    """Batch frames decode via the per-frame projection (zero wide
+    shuffle) and agree cell-for-cell with the shuffle form — including
+    the fixture's same-µs duplicate pair."""
     cat = _widened(MINI)
     a = {r["timestamp"]: r for r in
-         decode_wide(frames, cat, downcast=False, strategy="auto").collect()}
-    b = {r["timestamp"]: r for r in
-         decode_wide(frames, cat, downcast=False, strategy="long").collect()}
+         decode_wide(frames, cat, downcast=False).collect()}
+    b = {r["timestamp"]: r for r in _shuffle(frames, cat).collect()}
     assert a.keys() == b.keys() and len(a) == 7
     for ts in a:
         for c in b[ts].asDict():
@@ -351,33 +368,31 @@ def test_auto_picks_project_for_wide_batch(frames, catalog):
     # all PAD columns exist and are all-null (never match)
     pads = [c for c in b[ts].asDict() if c.startswith("PAD__")]
     assert len(pads) == 20 * 2  # sig byte + v{k} per topic
-    # plan shape: the projection output has no aggregate for unique ts
-    dfa = decode_wide(frames, cat, downcast=False, strategy="project")
+    dfa = decode_wide_project(frames, cat, downcast=False)
     assert dfa.count() == 7
 
 
 def test_auto_degrades_to_long_past_dup_cap(frames, catalog, monkeypatch):
-    """VERDICT r9 #2: a same-µs-heavy corpus (more duplicate timestamps
-    than _PROJECT_DUP_MAX) must NOT kill an unattended auto-strategy job
-    — auto falls back to the long path with a warning and stays
-    cell-identical; explicit strategy='project' still raises."""
+    """A same-µs-heavy corpus (more duplicate timestamps than
+    _PROJECT_DUP_MAX) must NOT kill an unattended job: decode_wide falls
+    back to the shuffle form with a warning and matches the projection
+    cell-for-cell; a direct decode_wide_project call still raises."""
     import warnings as _warnings
 
     from solarboat_data_pipeline_spark.operators import parse as parse_mod
 
     cat = _widened(MINI)
+    b = {r["timestamp"]: r for r in
+         decode_wide_project(frames, cat, downcast=False).collect()}
     # the fixture has one same-µs duplicate pair; cap 0 forces overflow
     monkeypatch.setattr(parse_mod, "_PROJECT_DUP_MAX", 0)
     with pytest.raises(parse_mod.ProjectDuplicateOverflow):
-        decode_wide(frames, cat, downcast=False, strategy="project").collect()
+        decode_wide_project(frames, cat, downcast=False)
     with _warnings.catch_warnings(record=True) as caught:
         _warnings.simplefilter("always")
         a = {r["timestamp"]: r for r in
-             decode_wide(frames, cat, downcast=False,
-                         strategy="auto").collect()}
+             decode_wide(frames, cat, downcast=False).collect()}
     assert any("falling back" in str(w.message) for w in caught)
-    b = {r["timestamp"]: r for r in
-         decode_wide(frames, cat, downcast=False, strategy="long").collect()}
     assert a.keys() == b.keys() and len(a) == 7
     for ts in a:
         for c in b[ts].asDict():
@@ -390,20 +405,19 @@ def test_auto_degrades_to_long_past_dup_cap(frames, catalog, monkeypatch):
 
 
 def test_parse_stage_degrades_to_long_past_dup_cap(spark, monkeypatch):
-    """parse_stage's fused stats pass measures the duplicate count; past
-    the cap it must take the long strategy DIRECTLY (no second
-    dup-enumeration pass via auto→project) and still match classic."""
+    """parse_stage's stats job measures the duplicate count; past the
+    cap it must take the shuffle form DIRECTLY (no dup-enumeration job)
+    and still match the projection over crop_to_bounds frames."""
     from solarboat_data_pipeline_spark.operators import parse as parse_mod
     from solarboat_data_pipeline_spark.pipeline import parse_stage
 
     cat = _widened(MINI)
-    monkeypatch.setattr(parse_mod, "_PROJECT_DUP_MAX", 0)
-    fast = parse_stage(spark, CORPUS, cat)
     lines = scan_candump(spark, CORPUS)
     fr = with_frame_meta(crop_to_bounds(with_timestamp(extract_frames(lines))))
-    classic = decode_wide(fr, cat, strategy="long")
+    b = {r["timestamp"]: r for r in decode_wide_project(fr, cat).collect()}
+    monkeypatch.setattr(parse_mod, "_PROJECT_DUP_MAX", 0)
+    fast = parse_stage(spark, CORPUS, cat)
     a = {r["timestamp"]: r for r in fast.collect()}
-    b = {r["timestamp"]: r for r in classic.collect()}
     assert a.keys() == b.keys() and len(a) == 7
     for ts in a:
         for c in b[ts].asDict():
@@ -416,17 +430,17 @@ def test_parse_stage_degrades_to_long_past_dup_cap(spark, monkeypatch):
 
 
 def test_parse_stage_wide_fast_path_matches_long(spark):
-    """pipeline.parse_stage's fused bounds+dup fast path (wide catalog,
-    two_pass crop): same rows, same cells, same crop semantics as the
-    classic path — on the adversarial fixture with its out-of-range
-    timestamp and same-µs duplicate frames."""
+    """pipeline.parse_stage (literal crop bounds from its stats job, then
+    the projection): same rows, same cells, same crop semantics as
+    crop_to_bounds + the shuffle form — on the adversarial fixture with
+    its out-of-range timestamp and same-µs duplicate frames."""
     from solarboat_data_pipeline_spark.pipeline import parse_stage
 
     cat = _widened(MINI)
     fast = parse_stage(spark, CORPUS, cat)
     lines = scan_candump(spark, CORPUS)
     fr = with_frame_meta(crop_to_bounds(with_timestamp(extract_frames(lines))))
-    classic = decode_wide(fr, cat, strategy="long")
+    classic = _shuffle(fr, cat, downcast=True)
     a = {r["timestamp"]: r for r in fast.collect()}
     b = {r["timestamp"]: r for r in classic.collect()}
     assert a.keys() == b.keys() and len(a) == 7

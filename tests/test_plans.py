@@ -78,6 +78,54 @@ def test_token_budget_sample_single_shuffle(spark, qs):
     assert not a.unbounded_following
 
 
+def _construction_jobs(spark, build) -> int:
+    """Spark jobs that run while ``build()`` constructs a DataFrame,
+    counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"construction-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "DataFrame construction")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# parse_stage's eager jobs per corpus shape: the stats job alone (3 Spark
+# jobs: two shuffle map stages and the result) when no timestamp repeats
+# or past the duplicate cap; plus the projection's duplicate-enumeration
+# job (2) when a few timestamps repeat. Like the Exchange checks above,
+# these counts may only go down.
+@pytest.mark.parametrize(
+    "case, want", [("dup_free", 3), ("same_us_pair", 5), ("over_cap", 3)]
+)
+def test_parse_stage_eager_jobs(spark, tmp_path, monkeypatch, case, want):
+    import os
+
+    from solarboat_data_pipeline_spark.catalog import CanCatalog
+    from solarboat_data_pipeline_spark.operators import parse as parse_mod
+    from solarboat_data_pipeline_spark.pipeline import parse_stage
+
+    from tests.conftest import DATA_DIR
+
+    catalog = CanCatalog.load(os.path.join(DATA_DIR, "mini_can_ids.json"))
+    corpus = os.path.join(DATA_DIR, "sample.candump")  # one same-µs pair
+    if case == "dup_free":
+        corpus = str(tmp_path / "dup_free.candump")
+        with open(corpus, "w") as f:
+            for i in range(6):
+                f.write(
+                    f"(1581695094.{100 + i:06d}) can0 021#fa9f04f600f600{i:02x}\n"
+                )
+    if case == "over_cap":
+        monkeypatch.setattr(parse_mod, "_PROJECT_DUP_MAX", 0)
+    got = _construction_jobs(spark, lambda: parse_stage(spark, corpus, catalog))
+    assert got <= want, (case, got)
+
+
 # mapInPandas (ArrowEvalPython/MapInPandas) is the sanctioned Python path;
 # BatchEvalPython would mean a row-at-a-time UDF leaked into a hot path
 NO_PYTHON_QUERIES = [

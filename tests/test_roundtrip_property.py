@@ -58,10 +58,11 @@ def test_format_then_parse_roundtrip(spark, frames):
         assert r["payload_hex"] == want_payload
 
 
-# randomized decode-strategy equivalence: for an arbitrary mini catalog
+# randomized decode-form equivalence: for an arbitrary mini catalog
 # topic mix (u8 / u16 pairs / bitfields) and arbitrary frames — including
 # same-µs duplicates, unknown signatures, and wrong payload lengths —
-# every decode_wide strategy must produce identical cells
+# both wide-decode forms and the pivoted long decode produce identical
+# cells
 DECODE_FRAME = st.tuples(
     st.integers(0, 49),  # same-second base keeps duplicate ts likely
     st.sampled_from([0, 100, 100, 200]),  # µs with planted collisions
@@ -80,7 +81,11 @@ def test_decode_strategies_agree_on_random_frames(spark, frames):
 
     from solarboat_data_pipeline_spark.catalog import CanCatalog
     from solarboat_data_pipeline_spark.operators.parse import (
+        _decode_frame_entries,
+        _decode_wide_shuffle,
+        decode_long,
         decode_wide,
+        pivot_wide,
         with_frame_meta,
         with_timestamp,
     )
@@ -102,8 +107,9 @@ def test_decode_strategies_agree_on_random_frames(spark, frames):
     )
     fr = with_frame_meta(with_timestamp(lines))
     outs = [
-        decode_wide(fr, cat, downcast=False, strategy=s)
-        for s in ("fused", "long", "frame_map")
+        decode_wide(fr, cat, downcast=False),
+        _decode_wide_shuffle(_decode_frame_entries(fr, cat), cat, False),
+        pivot_wide(decode_long(fr, cat), cat, strategy="agg"),
     ]
     collected = [
         {r["timestamp"]: r for r in o.collect()} for o in outs

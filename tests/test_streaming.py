@@ -113,12 +113,13 @@ def test_stream_resample_matches_batch_windows(spark, catalog, tmp_path):
 
 
 def test_stream_decode_wide_matches_batch(spark, catalog, tmp_path):
-    """VERDICT r9 #5: the streaming WIDE decode runs the projection-shaped
-    plan (no explode, no spec-map, no wide shuffle before the merge) and
-    is cell-identical to the batch strategies — including the fixture's
-    same-µs duplicate pair — with state bounded by UNIQUE timestamps,
-    not input frames."""
-    from solarboat_data_pipeline_spark.operators.parse import decode_wide
+    """The streaming WIDE decode (the shuffle form: no explode, no wide
+    shuffle before the merge) is cell-identical to the batch projection
+    — including the fixture's same-µs duplicate pair — with state
+    bounded by UNIQUE timestamps, not input frames."""
+    from solarboat_data_pipeline_spark.operators.parse import (
+        decode_wide_project,
+    )
     from solarboat_data_pipeline_spark.streaming import stream_decode_wide
 
     lines = stream_candump(spark, CORPUS_GLOB)
@@ -142,8 +143,8 @@ def test_stream_decode_wide_matches_batch(spark, catalog, tmp_path):
         with_timestamp(extract_frames(scan_candump(spark, CORPUS)))
     )
     want = {r["timestamp"]: r for r in
-            decode_wide(batch_frames, catalog, downcast=False,
-                        strategy="long").collect()}
+            decode_wide_project(batch_frames, catalog,
+                                downcast=False).collect()}
     # NO crop on the stream (the watermark replaces P4), so the batch
     # side here decodes uncropped frames too
     assert got.keys() == want.keys() and len(got) == 8
@@ -163,8 +164,8 @@ def test_stream_decode_wide_matches_batch(spark, catalog, tmp_path):
 def test_stream_decode_wide_merges_cross_batch_duplicates(spark, catalog,
                                                           tmp_path):
     """Same-µs duplicate frames arriving in DIFFERENT micro-batches must
-    still A1-average (the batch project path folds them via its eager dup
-    pass; the stream merges them in watermark-bounded state)."""
+    still A1-average (the batch projection folds them via its eager dup
+    job; the stream merges them in watermark-bounded state)."""
     from solarboat_data_pipeline_spark.streaming import stream_decode_wide
 
     d = tmp_path / "dup_stream"
