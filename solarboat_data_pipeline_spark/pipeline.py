@@ -27,6 +27,7 @@ from solarboat_data_pipeline_spark.operators.parse import (
     with_timestamp,
 )
 from solarboat_data_pipeline_spark.operators.timeseries import (
+    WIDE_INTERPOLATE_MAX_COLS,
     asfreq,
     asof_join_backward,
     clean_timestamp_outliers,
@@ -36,19 +37,8 @@ from solarboat_data_pipeline_spark.operators.timeseries import (
     resample_interpolate,
     resample_mean,
 )
-from solarboat_data_pipeline_spark.operators.timeseries import (
-    WIDE_INTERPOLATE_MAX_COLS,
-    WIDE_RESAMPLE_MAX_AGG_COLS,
-)
 from solarboat_data_pipeline_spark.sources.candump import extract_frames, scan_candump
 from solarboat_data_pipeline_spark.sources.gpx import scan_gpx
-
-# grid rows below which the in-memory-safe resample forms (fused /
-# classic) win outright over the bucketed scale kernels — the 24 M-line
-# corpus's 100 ms grid is 2.4 M rows and measured 2.7× faster unbucketed
-# (SCALE.md); past this, resample_stage(scale_buckets=...) switches to
-# the structurally bounded group-width plan
-SCALE_GRID_INMEM_MAX = 100_000_000
 
 # r14 (guide §2.4): below this total output width the unify stages carry
 # the telemetry columns THROUGH the reindex/as-of window instead of
@@ -136,116 +126,42 @@ def parse_stage(
     return wide
 
 
+# beyond this many value columns resample_stage runs the fused kernel:
+# the classic composition's per-column avg aggregates touch n_cols agg
+# buffers per input row, while the fused kernel averages only the
+# exploded non-null cells — that sparse cell aggregate measured 54 s →
+# ~15 s against the per-column aggregates on 11.9 M rows × 187 columns
+# at ~2% density
+WIDE_RESAMPLE_MAX_AGG_COLS = 32
+
+
 def resample_stage(
     wide: DataFrame,
     period_seconds: float,
     ts_col: str = "timestamp",
     max_gap_seconds: float = 60.0,
-    scale_buckets: int | None = None,
-    strategy: str = "auto",
     known_bounds: tuple | None = None,
 ) -> DataFrame:
     """E2 (``lib/resampler.py:59-101``): mean-downsample to a fixed period
     and gap-fill ≤ ``max_gap_seconds`` with bounded time interpolation
     (``limit = max(1, gap/period)`` samples, ``lib/resampler.py:63-66``).
 
-    ``strategy``: ``"fused"`` runs the single-kernel dense-grid form
-    (:func:`operators.timeseries.resample_interpolate`: one sparse sort +
-    arithmetic gap generation — no dense-grid window sorts, no
-    intermediate wide materialization); ``"classic"`` composes
-    ``resample_mean`` + ``interpolate_time``; ``"auto"`` picks fused for
-    wide catalogs (> ``WIDE_RESAMPLE_MAX_AGG_COLS`` value columns, the
-    regime where the composed plan's dense-grid sorts dominate) and
-    classic for narrow frames. Cell-for-cell equivalence is locked by
-    ``tests/test_resample_interpolate.py``.
-
-    ``scale_buckets``: by default the gap-fill's window runs per-column
-    (fused) or globally (classic) — correct while one column's sparse
-    samples (fused) or the resampled grid (classic) fits one task's sort.
-    For the 100 TB shape (years of sub-second grid → 1e9+ grid rows) pass
-    a bucket count: the stage then MEASURES the grid with one thin
-    bounds job (ts column only — the scan prunes to it; the measured
-    bounds are reused by the chosen kernel's spine, so the job is paid
-    once, not re-derived downstream) and picks the cheapest scale-safe
-    plan. The bounds job executes ``wide``'s lineage eagerly — if that
-    lineage is an expensive unmaterialized pipeline (e.g. a full parse
-    stage), materialize it first or the measurement re-runs it. The
-    selection exists because the always-bucketed form was a 2.7× tax at
-    in-memory sizes (510 s vs 186 s at the 24 M / 100 ms corpus):
-
-    * grid ≤ ``SCALE_GRID_INMEM_MAX`` → the normal fused/classic
-      selection below (fastest, and at this size nothing can funnel a
-      task anyway);
-    * larger → the fused kernel with ``group_width = ceil(grid /
-      scale_buckets)``, whose windows partition by (column, grid group)
-      and whose spine/repivot are already two-level — no single-task
-      sort anywhere, same plan shape the 1e9-row grid needs.
-
-    ``strategy="bucketed"`` (with ``scale_buckets``) forces the
-    bucketed kernel (``resample_mean`` + ``operators/scale.py``
-    interpolation) unconditionally — the explicit form the SCALE.md
-    equivalence evidence was recorded against.
+    The output is the dense grid with DOUBLE value columns. Frames with
+    more than ``WIDE_RESAMPLE_MAX_AGG_COLS`` value columns run the fused
+    kernel :func:`operators.timeseries.resample_interpolate`; narrower
+    frames run ``resample_mean(dense=True)`` + ``interpolate_time``. Both
+    forms are cell-for-cell equal (``tests/test_resample_interpolate.py``).
+    A grid too large for one column's samples to sort in one task calls
+    ``resample_interpolate(group_width=...)`` directly, as the
+    ``a3_w3_fused_grid`` driver row does.
 
     ``known_bounds``: ``(lo, hi)`` datetimes equal to ``wide``'s exact
     ``ts_col`` min/max — e.g. the parse stage's crop bounds
-    (``parse_stage(stats_out=...)``) when its first and last frames
-    match the catalog. Skips this stage's own bounds jobs (the
-    dense-spine aggregate; the scale-path grid measurement)."""
+    (``parse_stage(stats_out=...)``). They replace the dense spine's
+    bounds aggregate, which the narrow form otherwise runs as one eager
+    ``first()`` while the DataFrame is built."""
     limit = max(1, int(max_gap_seconds / period_seconds))
-    if strategy == "bucketed":
-        if scale_buckets is None:
-            raise ValueError("strategy='bucketed' requires scale_buckets")
-        from solarboat_data_pipeline_spark.operators import scale as _scale
-
-        res = resample_mean(wide, period_seconds, ts_col=ts_col, dense=True,
-                            known_bounds=known_bounds)
-        return _scale.interpolate_time(
-            res,
-            ts_col=ts_col,
-            limit=limit,
-            limit_area="inside",
-            num_buckets=scale_buckets,
-        )
-    if scale_buckets is not None:
-        if strategy != "auto":
-            raise ValueError(
-                "scale_buckets composes with strategy='auto' (measured"
-                " selection) or 'bucketed' (the explicit bucketed kernel);"
-                f" got strategy={strategy!r}"
-            )
-        if known_bounds is None:
-            b = wide.agg(
-                F.min(ts_col).alias("__lo"), F.max(ts_col).alias("__hi")
-            ).first()
-            known_bounds = (b["__lo"], b["__hi"])
-        b = {"__lo": known_bounds[0], "__hi": known_bounds[1]}
-        if b["__lo"] is not None:
-            step_us = int(round(period_seconds * 1_000_000))
-            span_us = int(
-                (b["__hi"] - b["__lo"]).total_seconds() * 1_000_000
-            )
-            grid = span_us // step_us + 1
-            # the measured bounds ride along so the fused kernel drops
-            # its internal bounds-aggregate subtree — the thin job is
-            # paid ONCE, not three times (measure + kb + spine)
-            if grid > SCALE_GRID_INMEM_MAX:
-                return resample_interpolate(
-                    wide,
-                    period_seconds,
-                    ts_col=ts_col,
-                    limit=limit,
-                    limit_area="inside",
-                    group_width=max(1, -(-grid // scale_buckets)),
-                    known_bounds=known_bounds,
-                )
-        # small grid: fall through to the fastest in-memory-safe form
-    if strategy not in ("auto", "fused", "classic"):
-        raise ValueError("strategy must be auto|fused|classic|bucketed")
-    n_vals = len(wide.columns) - 1
-    use_fused = strategy == "fused" or (
-        strategy == "auto" and n_vals > WIDE_RESAMPLE_MAX_AGG_COLS
-    )
-    if use_fused:
+    if len(wide.columns) - 1 > WIDE_RESAMPLE_MAX_AGG_COLS:
         # A measured-empty bounds pair degrades to the kernel's own
         # aggregate (which yields the same empty grid) — the fused
         # kernel's known_bounds contract expects real instants.

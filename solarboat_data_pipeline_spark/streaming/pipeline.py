@@ -200,7 +200,7 @@ def stream_enrich_grid(
     """
     if value_cols is None:
         value_cols = tuple(c for c in static.columns if c != ts_col)
-    us = int(grid_seconds * 1_000_000)
+    us = int(round(grid_seconds * 1_000_000))
     snapped = stream.withColumn(
         "__grid_ts",
         F.timestamp_micros(

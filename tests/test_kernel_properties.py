@@ -5,8 +5,9 @@ kernels against their straightforward exact twins:
   two-phase shard plan must be invisible in the result, including under
   duplicate order values, where only the VALUE multiset per rank is
   deterministic);
-* ``resample_mean`` sparse long path ≡ per-column aggregate path (the
-  width-triggered strategy switch must not change a single cell);
+* ``resample_mean`` ≡ the fused kernel's sparse-cell mean
+  (``resample_interpolate`` with ``limit=0`` fills no gap, so it yields
+  the dense mean grid from the exploded non-null cells alone);
 * ``interval_join`` chunked equi-join plan ≡ brute-force range predicate
   (timeseries.py — chunk explosion over arbitrary interval/chunk
   geometry, intervals nesting/overlapping/degenerate).
@@ -77,20 +78,14 @@ def test_resample_sparse_long_path_matches_agg_path(spark, rows, period):
         [(t, a, b) for t, a, b in rows], "epoch long, a double, b double"
     ).select(F.timestamp_seconds("epoch").alias("timestamp"), "a", "b")
 
-    def run():
-        out = tsops.resample_mean(df, period, dense=True)
+    def run(out):
         return sorted(
             ((r["timestamp"], r["a"], r["b"]) for r in out.collect()),
             key=lambda r: r[0],
         )
 
-    agg = run()
-    orig = tsops.WIDE_RESAMPLE_MAX_AGG_COLS
-    tsops.WIDE_RESAMPLE_MAX_AGG_COLS = 1  # force the sparse long path
-    try:
-        sparse = run()
-    finally:
-        tsops.WIDE_RESAMPLE_MAX_AGG_COLS = orig
+    agg = run(tsops.resample_mean(df, period, dense=True))
+    sparse = run(tsops.resample_interpolate(df, period, limit=0))
     assert len(agg) == len(sparse)
     for (t1, a1, b1), (t2, a2, b2) in zip(agg, sparse):
         assert t1 == t2

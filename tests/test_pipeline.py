@@ -175,28 +175,34 @@ def test_unify_stages_compose_independently(spark, catalog, forecast):
 
 
 def test_resample_stage_bucketed_matches_global(spark, catalog):
-    # every scale form must match the global-window form cell-for-cell:
-    # the explicit r5 bucketed kernel, the measured auto selection at a
-    # small grid (falls through to fused/classic), and the forced
-    # group-width plan (SCALE_GRID_INMEM_MAX patched to 0)
-    import solarboat_data_pipeline_spark.pipeline as pl
+    # every scale form must match the stage cell-for-cell: the bucketed
+    # interpolation kernel over the mean grid, and the fused kernel's
+    # group-width plan with three grid groups
+    from solarboat_data_pipeline_spark.operators import scale
+    from solarboat_data_pipeline_spark.operators.timeseries import (
+        resample_interpolate,
+        resample_mean,
+    )
 
     wide = parse_stage(spark, CORPUS, catalog)
     g = resample_stage(wide, 1.0)
+    limit = 60  # resample_stage's default: 60 s gap / 1 s period
+    grid = g.count()
     forms = {
-        "bucketed": resample_stage(wide, 1.0, scale_buckets=3,
-                                   strategy="bucketed"),
-        "auto_small": resample_stage(wide, 1.0, scale_buckets=3),
+        "bucketed": scale.interpolate_time(
+            resample_mean(wide, 1.0, dense=True),
+            limit=limit,
+            limit_area="inside",
+            num_buckets=3,
+        ),
+        "group_width": resample_interpolate(
+            wide, 1.0, limit=limit, limit_area="inside",
+            group_width=max(1, -(-grid // 3)),
+        ),
     }
-    orig = pl.SCALE_GRID_INMEM_MAX
-    try:
-        pl.SCALE_GRID_INMEM_MAX = 0
-        forms["auto_big"] = resample_stage(wide, 1.0, scale_buckets=3)
-    finally:
-        pl.SCALE_GRID_INMEM_MAX = orig
-    # the big-grid selection must be the structurally bounded plan: its
-    # lead window partitions by (column, grid group), never one task
-    plan = forms["auto_big"]._jdf.queryExecution().optimizedPlan().toString()
+    # the group-width plan is the structurally bounded one: its lead
+    # window partitions by (column, grid group), never one task
+    plan = forms["group_width"]._jdf.queryExecution().optimizedPlan().toString()
     assert "__g" in plan, plan
     ga = {r["timestamp"]: r for r in g.collect()}
     for name, s in forms.items():
@@ -210,7 +216,3 @@ def test_resample_stage_bucketed_matches_global(spark, catalog):
                 assert (va is None) == (vb is None), (name, ts, c)
                 if va is not None:
                     assert math.isclose(va, vb, rel_tol=1e-9), (name, ts, c)
-    with pytest.raises(ValueError, match="composes with"):
-        resample_stage(wide, 1.0, scale_buckets=3, strategy="fused")
-    with pytest.raises(ValueError, match="requires scale_buckets"):
-        resample_stage(wide, 1.0, strategy="bucketed")

@@ -126,6 +126,37 @@ def test_parse_stage_eager_jobs(spark, tmp_path, monkeypatch, case, want):
     assert got <= want, (case, got)
 
 
+# resample_stage's eager jobs: the fused form (> 32 value columns) runs
+# none; the classic form runs the dense spine's bounds first() (2 Spark
+# jobs: the aggregate's shuffle map stage and the result) unless
+# known_bounds replaces it. Like the counts above, these may only go down.
+@pytest.mark.parametrize(
+    "n_cols, bounds, want",
+    [(40, False, 0), (40, True, 0), (2, False, 2), (2, True, 0)],
+)
+def test_resample_stage_eager_jobs(spark, n_cols, bounds, want):
+    from pyspark.sql import functions as F
+
+    from solarboat_data_pipeline_spark.pipeline import resample_stage
+
+    cols = [f"s{i}" for i in range(n_cols)]
+    rows = [
+        (t * 1.7, *[float(t + i) if (t + i) % 3 else None for i in range(n_cols)])
+        for t in range(30)
+    ]
+    df = spark.createDataFrame(
+        rows, "epoch double, " + ", ".join(f"{c} double" for c in cols)
+    ).select(F.timestamp_seconds("epoch").alias("timestamp"), *cols)
+    kb = None
+    if bounds:
+        b = df.agg(F.min("timestamp"), F.max("timestamp")).first()
+        kb = (b[0], b[1])
+    got = _construction_jobs(
+        spark, lambda: resample_stage(df, 1.0, known_bounds=kb)
+    )
+    assert got <= want, (n_cols, bounds, got)
+
+
 # mapInPandas (ArrowEvalPython/MapInPandas) is the sanctioned Python path;
 # BatchEvalPython would mean a row-at-a-time UDF leaked into a hot path
 NO_PYTHON_QUERIES = [

@@ -139,9 +139,19 @@ def test_resample_stage_strategies_agree(spark):
             (t, *[rng.uniform(0, 10) if rng.random() < 0.1 else None for _ in cols])
         )
     df = _mk(spark, rows, cols)
-    fused = resample_stage(df, 1.0)  # auto → fused at 40 cols
-    classic = resample_stage(df, 1.0, strategy="classic")
-    _assert_same(fused, classic)
+    # the value-column count is the stage's only choice: the fused kernel
+    # (one sparse lead() Window) past WIDE_RESAMPLE_MAX_AGG_COLS, the
+    # classic pair of dense-grid windows at or below it
+    from solarboat_data_pipeline_spark.plans.audit import explain_string
+
+    limit = 60  # resample_stage's default: 60 s gap / 1 s period
+    fused = resample_stage(df, 1.0)
+    assert explain_string(fused).count(") Window") == 1
+    _assert_same(fused, _classic(df, 1.0, limit))
+    narrow = df.select("timestamp", "s0", "s1")
+    stage = resample_stage(narrow, 1.0)
+    assert explain_string(stage).count(") Window") >= 2
+    _assert_same(stage, _classic(narrow, 1.0, limit))
 
 
 def test_fused_plan_has_single_sort(spark):

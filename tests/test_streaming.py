@@ -347,3 +347,27 @@ def test_stream_enrich_grid_matches_batch_asof(spark, tmp_path):
     want = {r["timestamp"]: r["ghi"] for r in asof.collect()}
     assert got == want
     assert len(got) == len(tel_epochs)
+
+
+def test_stream_enrich_grid_exact_fractional_grid(spark):
+    """A fractional grid period snaps to the exact grid: on a 4.1 s grid
+    every stream row 1 s past grid point k gets the static value of k.
+    The function is stateless, so a batch frame exercises the same plan."""
+    from solarboat_data_pipeline_spark.streaming.pipeline import stream_enrich_grid
+
+    n = 20
+    static = spark.range(n).select(
+        F.timestamp_micros(F.col("id") * 4_100_000).alias("timestamp"),
+        F.col("id").alias("k"),
+    )
+    stream = spark.range(n).select(
+        F.timestamp_micros(F.col("id") * 4_100_000 + 1_000_000).alias(
+            "timestamp"
+        ),
+        F.col("id").alias("want"),
+    )
+    rows = stream_enrich_grid(stream, static, 4.1).collect()
+    assert len(rows) == n
+    assert all(r["k"] == r["want"] for r in rows), sorted(
+        (r["want"], r["k"]) for r in rows
+    )

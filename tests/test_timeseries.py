@@ -295,12 +295,15 @@ def test_iqr_clip(spark):
     assert 10000.0 not in [v for v in vals if v is not None]
 
 
-def test_interpolate_long_strategy_matches_wide(spark):
-    # the >8-column auto-switch must be invisible: long and wide strategies
-    # agree cell-for-cell on nulls and values
+def test_interpolate_long_strategy_matches_wide(spark, monkeypatch):
+    # the >8-column switch to the long plan must be invisible: the long and
+    # wide (forced by raising WIDE_INTERPOLATE_MAX_COLS) forms agree
+    # cell-for-cell on nulls and values
     import math
 
     from pyspark.sql import functions as F
+
+    from solarboat_data_pipeline_spark.plans.audit import explain_string
 
     base = spark.range(120).select(
         F.timestamp_seconds(F.lit(1700000000) + F.col("id") * 10).alias("timestamp"),
@@ -312,16 +315,14 @@ def test_interpolate_long_strategy_matches_wide(spark):
         ],
     )
     for kwargs in ({"limit": 3}, {"limit_area": None}, {}):
-        wide = (
-            ts.interpolate_time(base, strategy="wide", **kwargs)
-            .orderBy("timestamp")
-            .collect()
-        )
-        long = (
-            ts.interpolate_time(base, strategy="long", **kwargs)
-            .orderBy("timestamp")
-            .collect()
-        )
+        long_df = ts.interpolate_time(base, **kwargs)
+        with monkeypatch.context() as m:
+            m.setattr(ts, "WIDE_INTERPOLATE_MAX_COLS", 12)
+            wide_df = ts.interpolate_time(base, **kwargs)
+        assert "posexplode" in explain_string(long_df)
+        assert "posexplode" not in explain_string(wide_df)
+        wide = wide_df.orderBy("timestamp").collect()
+        long = long_df.orderBy("timestamp").collect()
         assert len(wide) == len(long)
         for rw, rl in zip(wide, long):
             for c in [f"c{i}" for i in range(12)]:
