@@ -1273,8 +1273,7 @@ def pipeline_can_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize stage boundaries once (lazy local checkpoints): the
     # resample spine bounds, asfreq bounds, reindex and final join each
     # re-execute their upstream lineage otherwise — the parse ran 4×
-    # per call (resample_stage's own docstring: materialize an
-    # expensive unmaterialized lineage before the bounds job).
+    # per call.
     # the parse stats job already measured the crop bounds — carry them
     # into the resample spine and the asfreq grid (known_bounds) so
     # neither stage re-aggregates the table.

@@ -35,7 +35,6 @@ from solarboat_data_pipeline_spark.operators.timeseries import (
     interpolate_time,
     reindex_interpolate,
     resample_interpolate,
-    resample_mean,
 )
 from solarboat_data_pipeline_spark.sources.candump import extract_frames, scan_candump
 from solarboat_data_pipeline_spark.sources.gpx import scan_gpx
@@ -126,15 +125,6 @@ def parse_stage(
     return wide
 
 
-# beyond this many value columns resample_stage runs the fused kernel:
-# the classic composition's per-column avg aggregates touch n_cols agg
-# buffers per input row, while the fused kernel averages only the
-# exploded non-null cells — that sparse cell aggregate measured 54 s →
-# ~15 s against the per-column aggregates on 11.9 M rows × 187 columns
-# at ~2% density
-WIDE_RESAMPLE_MAX_AGG_COLS = 32
-
-
 def resample_stage(
     wide: DataFrame,
     period_seconds: float,
@@ -146,33 +136,27 @@ def resample_stage(
     and gap-fill ≤ ``max_gap_seconds`` with bounded time interpolation
     (``limit = max(1, gap/period)`` samples, ``lib/resampler.py:63-66``).
 
-    The output is the dense grid with DOUBLE value columns. Frames with
-    more than ``WIDE_RESAMPLE_MAX_AGG_COLS`` value columns run the fused
-    kernel :func:`operators.timeseries.resample_interpolate`; narrower
-    frames run ``resample_mean(dense=True)`` + ``interpolate_time``. Both
-    forms are cell-for-cell equal (``tests/test_resample_interpolate.py``).
-    A grid too large for one column's samples to sort in one task calls
-    ``resample_interpolate(group_width=...)`` directly, as the
-    ``a3_w3_fused_grid`` driver row does.
+    The output is the dense grid with DOUBLE value columns, built by the
+    fused kernel :func:`operators.timeseries.resample_interpolate`. It is
+    cell-for-cell equal to ``resample_mean(dense=True)`` +
+    ``interpolate_time`` (``tests/test_resample_interpolate.py``) and runs
+    no eager job. A grid too large for one column's samples to sort in
+    one task calls ``resample_interpolate(group_width=...)`` directly, as
+    the ``a3_w3_fused_grid`` driver row does.
 
     ``known_bounds``: ``(lo, hi)`` datetimes equal to ``wide``'s exact
     ``ts_col`` min/max — e.g. the parse stage's crop bounds
-    (``parse_stage(stats_out=...)``). They replace the dense spine's
-    bounds aggregate, which the narrow form otherwise runs as one eager
-    ``first()`` while the DataFrame is built."""
+    (``parse_stage(stats_out=...)``). They replace the kernel's bounds
+    aggregate in the plan."""
     limit = max(1, int(max_gap_seconds / period_seconds))
-    if len(wide.columns) - 1 > WIDE_RESAMPLE_MAX_AGG_COLS:
-        # A measured-empty bounds pair degrades to the kernel's own
-        # aggregate (which yields the same empty grid) — the fused
-        # kernel's known_bounds contract expects real instants.
-        kb = known_bounds if (known_bounds and known_bounds[0] is not None) else None
-        return resample_interpolate(
-            wide, period_seconds, ts_col=ts_col, limit=limit,
-            limit_area="inside", known_bounds=kb,
-        )
-    res = resample_mean(wide, period_seconds, ts_col=ts_col, dense=True,
-                        known_bounds=known_bounds)
-    return interpolate_time(res, ts_col=ts_col, limit=limit, limit_area="inside")
+    # A measured-empty bounds pair degrades to the kernel's own aggregate
+    # (which yields the same empty grid) — the kernel's known_bounds
+    # contract expects real instants.
+    kb = known_bounds if (known_bounds and known_bounds[0] is not None) else None
+    return resample_interpolate(
+        wide, period_seconds, ts_col=ts_col, limit=limit,
+        limit_area="inside", known_bounds=kb,
+    )
 
 
 def unify_forecast_stage(

@@ -175,44 +175,28 @@ def test_unify_stages_compose_independently(spark, catalog, forecast):
 
 
 def test_resample_stage_bucketed_matches_global(spark, catalog):
-    # every scale form must match the stage cell-for-cell: the bucketed
-    # interpolation kernel over the mean grid, and the fused kernel's
-    # group-width plan with three grid groups
+    # the bucketed interpolation kernel over the mean grid must match the
+    # stage cell-for-cell
     from solarboat_data_pipeline_spark.operators import scale
-    from solarboat_data_pipeline_spark.operators.timeseries import (
-        resample_interpolate,
-        resample_mean,
-    )
+    from solarboat_data_pipeline_spark.operators.timeseries import resample_mean
 
     wide = parse_stage(spark, CORPUS, catalog)
     g = resample_stage(wide, 1.0)
     limit = 60  # resample_stage's default: 60 s gap / 1 s period
-    grid = g.count()
-    forms = {
-        "bucketed": scale.interpolate_time(
-            resample_mean(wide, 1.0, dense=True),
-            limit=limit,
-            limit_area="inside",
-            num_buckets=3,
-        ),
-        "group_width": resample_interpolate(
-            wide, 1.0, limit=limit, limit_area="inside",
-            group_width=max(1, -(-grid // 3)),
-        ),
-    }
-    # the group-width plan is the structurally bounded one: its lead
-    # window partitions by (column, grid group), never one task
-    plan = forms["group_width"]._jdf.queryExecution().optimizedPlan().toString()
-    assert "__g" in plan, plan
+    b = scale.interpolate_time(
+        resample_mean(wide, 1.0, dense=True),
+        limit=limit,
+        limit_area="inside",
+        num_buckets=3,
+    )
     ga = {r["timestamp"]: r for r in g.collect()}
-    for name, s in forms.items():
-        sa = {r["timestamp"]: r for r in s.collect()}
-        assert ga.keys() == sa.keys(), name
-        for ts, row in ga.items():
-            for c in g.columns:
-                if c == "timestamp":
-                    continue
-                va, vb = row[c], sa[ts][c]
-                assert (va is None) == (vb is None), (name, ts, c)
-                if va is not None:
-                    assert math.isclose(va, vb, rel_tol=1e-9), (name, ts, c)
+    ba = {r["timestamp"]: r for r in b.collect()}
+    assert ga.keys() == ba.keys()
+    for ts, row in ga.items():
+        for c in g.columns:
+            if c == "timestamp":
+                continue
+            va, vb = row[c], ba[ts][c]
+            assert (va is None) == (vb is None), (ts, c)
+            if va is not None:
+                assert math.isclose(va, vb, rel_tol=1e-9), (ts, c)

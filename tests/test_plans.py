@@ -126,15 +126,11 @@ def test_parse_stage_eager_jobs(spark, tmp_path, monkeypatch, case, want):
     assert got <= want, (case, got)
 
 
-# resample_stage's eager jobs: the fused form (> 32 value columns) runs
-# none; the classic form runs the dense spine's bounds first() (2 Spark
-# jobs: the aggregate's shuffle map stage and the result) unless
-# known_bounds replaces it. Like the counts above, these may only go down.
-@pytest.mark.parametrize(
-    "n_cols, bounds, want",
-    [(40, False, 0), (40, True, 0), (2, False, 2), (2, True, 0)],
-)
-def test_resample_stage_eager_jobs(spark, n_cols, bounds, want):
+# resample_stage runs no eager job at any width, with or without
+# known_bounds: the fused kernel keeps its bounds aggregate in the plan.
+@pytest.mark.parametrize("bounds", [False, True])
+@pytest.mark.parametrize("n_cols", [40, 2])
+def test_resample_stage_eager_jobs(spark, n_cols, bounds):
     from pyspark.sql import functions as F
 
     from solarboat_data_pipeline_spark.pipeline import resample_stage
@@ -154,7 +150,7 @@ def test_resample_stage_eager_jobs(spark, n_cols, bounds, want):
     got = _construction_jobs(
         spark, lambda: resample_stage(df, 1.0, known_bounds=kb)
     )
-    assert got <= want, (n_cols, bounds, got)
+    assert got == 0, (n_cols, bounds, got)
 
 
 # mapInPandas (ArrowEvalPython/MapInPandas) is the sanctioned Python path;

@@ -108,6 +108,10 @@ def test_fused_group_width_matches_global(spark):
                 g = tsops.resample_interpolate(
                     df, 1.0, limit=limit, limit_area=la, group_width=gw
                 )
+                # the structurally bounded plan: its lead window
+                # partitions by (column, grid group), never one task
+                plan = g._jdf.queryExecution().optimizedPlan().toString()
+                assert "__g" in plan, plan
                 _assert_same(g, base)
 
 
@@ -130,7 +134,7 @@ def test_fused_all_null_column_and_empty(spark):
 
 def test_resample_stage_strategies_agree(spark):
     rng = random.Random(7)
-    cols = tuple(f"s{i}" for i in range(40))  # > WIDE_RESAMPLE_MAX_AGG_COLS
+    cols = tuple(f"s{i}" for i in range(40))
     rows = []
     t = 0.0
     for _ in range(300):
@@ -139,19 +143,16 @@ def test_resample_stage_strategies_agree(spark):
             (t, *[rng.uniform(0, 10) if rng.random() < 0.1 else None for _ in cols])
         )
     df = _mk(spark, rows, cols)
-    # the value-column count is the stage's only choice: the fused kernel
-    # (one sparse lead() Window) past WIDE_RESAMPLE_MAX_AGG_COLS, the
-    # classic pair of dense-grid windows at or below it
+    # the stage has no choice left: at any width it is the fused kernel
+    # (one sparse lead() Window), equal to the classic composition built
+    # from the independent kernels
     from solarboat_data_pipeline_spark.plans.audit import explain_string
 
     limit = 60  # resample_stage's default: 60 s gap / 1 s period
-    fused = resample_stage(df, 1.0)
-    assert explain_string(fused).count(") Window") == 1
-    _assert_same(fused, _classic(df, 1.0, limit))
-    narrow = df.select("timestamp", "s0", "s1")
-    stage = resample_stage(narrow, 1.0)
-    assert explain_string(stage).count(") Window") >= 2
-    _assert_same(stage, _classic(narrow, 1.0, limit))
+    for frame in (df, df.select("timestamp", "s0", "s1")):
+        stage = resample_stage(frame, 1.0)
+        assert explain_string(stage).count(") Window") == 1
+        _assert_same(stage, _classic(frame, 1.0, limit))
 
 
 def test_fused_plan_has_single_sort(spark):
